@@ -12,8 +12,9 @@ from __future__ import annotations
 
 import re
 
-#: slack when matching engine timestamps (whole ms) to a Python window
-_SLACK_S = 0.05
+#: how much earlier than the Python clock an engine stamp (whole ms) of
+#: the same instant can read; widen a window's start by it
+STAMP_SLACK_S = 0.005
 
 
 def _ms(opt_date) -> float | None:
@@ -33,7 +34,7 @@ def stages_between(spark, t0: float, t1: float) -> list[dict]:
         start, end = _ms(s.submissionTime()), _ms(s.completionTime())
         if start is None or end is None:
             continue
-        if not (t0 - _SLACK_S <= start <= t1 + _SLACK_S):
+        if not t0 <= start <= t1:
             continue
         out.append({
             "id": s.stageId(),
@@ -74,6 +75,32 @@ def _parse_metric(text: str, metric_type: str) -> float:
     return value * 1e6 if metric_type == "nsTiming" else value
 
 
+def sql_executions_between(spark, t0: float, t1: float) -> list[tuple]:
+    """``(start, end)`` of every SQL execution submitted inside ``[t0, t1]``,
+    as the engine stamped them: from after physical planning to after the
+    last job and the write commit."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        start, end = e.submissionTime() / 1e3, _ms(e.completionTime())
+        if end is not None and t0 <= start <= t1:
+            out.append((start, end))
+    return sorted(out)
+
+
+def union_s(intervals) -> float:
+    """Seconds covered by the union of ``(start, end)`` intervals."""
+    total, cursor = 0.0, float("-inf")
+    for start, end in sorted(intervals):
+        start = max(start, cursor)
+        if end > start:
+            total += end - start
+            cursor = end
+    return total
+
+
 def sql_metrics_between(spark, t0: float, t1: float) -> list[tuple]:
     """``(node name, metric name, value)`` for every plan node of every SQL
     execution submitted inside ``[t0, t1]``.
@@ -88,7 +115,7 @@ def sql_metrics_between(spark, t0: float, t1: float) -> list[tuple]:
     out = []
     for i in range(execs.size()):
         e = execs.apply(i)
-        if not (t0 - _SLACK_S <= e.submissionTime() / 1e3 <= t1 + _SLACK_S):
+        if not t0 <= e.submissionTime() / 1e3 <= t1:
             continue
         eid = e.executionId()
         shown = store.executionMetrics(eid)
@@ -111,3 +138,15 @@ def sql_metrics_between(spark, t0: float, t1: float) -> list[tuple]:
 
 def metric_sum(rows: list[tuple], node: str, metric: str) -> float:
     return sum(v for n, m, v in rows if n == node and m == metric)
+
+
+def peak_heap_bytes(spark) -> int:
+    """The driver's peak used JVM heap since it started, as the executor
+    summary records it (the way ``bench._memory_metrics`` reads it)."""
+    execs = spark._jsc.sc().statusStore().executorList(False)
+    peak = 0
+    for i in range(execs.length()):
+        pm = execs.apply(i).peakMemoryMetrics()
+        if pm.isDefined():
+            peak = max(peak, pm.get().getMetricValue("JVMHeapMemory"))
+    return peak

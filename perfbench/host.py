@@ -81,20 +81,30 @@ def host_mem_bytes() -> int:
 
 
 class RssSampler:
-    """Samples the process tree's summed RSS on a thread; keeps the peak.
+    """Samples the process tree's summed RSS on a thread; keeps the peak
+    that two consecutive samples both saw.
 
+    A process the JVM spawns shows the JVM's whole memory under its own
+    pid until it execs (the spawn shares the parent's address space), so
+    a single sample can count the JVM twice; a sustained peak cannot.
     Use as a context manager around the region whose peak is wanted.
     """
 
     def __init__(self, interval: float = 0.2):
         self.interval = interval
         self.peak = 0
+        self._last = 0
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
 
+    def _sample(self) -> None:
+        now = tree_rss_bytes()
+        self.peak = max(self.peak, min(now, self._last))
+        self._last = now
+
     def _run(self) -> None:
         while True:
-            self.peak = max(self.peak, tree_rss_bytes())
+            self._sample()
             if self._stop.wait(self.interval):
                 return
 
@@ -107,4 +117,4 @@ class RssSampler:
     def __exit__(self, *exc) -> None:
         self._stop.set()
         self._thread.join(timeout=10)
-        self.peak = max(self.peak, tree_rss_bytes())
+        self._sample()

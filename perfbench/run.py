@@ -1,13 +1,14 @@
 #!/usr/bin/env python3
 """Benchmark of the exporter/receiver pipeline, one workload per process.
 
-    python3 perfbench/run.py --workload export_unique --seed 1 \\
-        --seconds 10 --trace 0
+    python3 perfbench/run.py --workload roundtrip_unique --seed 1 \\
+        --seconds 8 --trace 0
 
 Run from the repository root. One driver process on ``local[nproc]`` runs
 one job at a time: a closed loop with a single client, the way the batch
-pipeline is used. The run sets up ``SETUPS`` times (session start plus
-page materialization) and reports the median, warms up with the
+pipeline is used. The run sets up ``SETUPS`` times (session start plus the
+workload's input: pages materialized, or the query tables checked) and
+reports the median, warms up with the
 workload's untimed passes, then repeats the workload's operation
 until ``--seconds`` have passed, at least ``MIN_RUNS`` times. Every output
 is checked before anything is reported.
@@ -39,18 +40,26 @@ ROOT = os.path.dirname(HERE)
 SETUPS = 3
 MIN_RUNS = 3
 
+#: the driver_queries workload: the eight non-pipeline bench queries of
+#: ``__spark_entry__.queries()``
+QUERIES = ("tpch_q1", "revenue_by_nation", "dedup_exact",
+           "dedup_minhash_lsh", "dedup_simhash_hamming", "embedding_topk",
+           "token_count", "quality_score")
+
 #: end-to-end metrics (``--trace 0``): name -> unit
 END_TO_END = {
     "setup_s": "s",
-    "pages_per_s": "pages/s",
+    "run_s": "s",
     "cpu_s": "s",
-    "wire_bytes_per_page": "B/page",
-    "peak_rss_mb": "MB",
+    "peak_nonheap_rss_mb": "MB",
 }
 
 _SELF = {f"self.{a}{p}_s": "s"
          for a in ("plans.pipeline", "plans.aggregate", "plans.verify")
          for p in ("", ".map_stages", ".reduce_stages")}
+
+_OPERATORS = {f"operators.{q}.{m}": "s"
+              for q in QUERIES for m in ("s", "plan_s")}
 
 #: per-layer metrics (``--trace 1``): name -> unit. A layer the workload
 #: does not run reads 0.
@@ -58,6 +67,7 @@ PER_LAYER = {
     "trace.wall_s": "s",
     "trace.untraced_median_s": "s",
     "trace.overhead_s": "s",
+    "trace.engine_s": "s",
     "trace.layer_sum_error": "ratio",
     "trace.stage_overlap_s": "s",
     "self.unattributed_s": "s",
@@ -73,10 +83,13 @@ PER_LAYER = {
     "plans.route.files": "count",
     "plans.route.bytes": "B",
     "plans.route.commit_s": "s",
+    "plans.pipeline.s": "s",
     "plans.aggregate.s": "s",
+    "plans.verify.s": "s",
     "plans.decode.python_s": "s",
     "plans.decode.bytes_to_python": "B",
     "plans.verify.shuffle_bytes": "B",
+    "codec.wire_bytes_per_page": "B/page",
     "codec.raw_bytes_per_page": "B/page",
     "codec.blobs": "count",
     "codec.zstd_ratio": "ratio",
@@ -88,9 +101,11 @@ PER_LAYER = {
     "jvm.gc_s": "s",
     "jvm.spill_bytes": "B",
     "jvm.peak_execution_memory_bytes": "B",
+    "jvm.peak_heap_bytes": "B",
     "driver.plan_s": "s",
+    **_OPERATORS,
     "setup.session_start_s": "s",
-    "setup.sink_write_s": "s",
+    "setup.oracle_s": "s",
     "setup.warmup_s": "s",
 }
 
@@ -107,9 +122,9 @@ def _args(argv):
     return p.parse_args(argv)
 
 
-def measure(runner, seconds: float, monitor) -> tuple[list[dict], int]:
+def measure(runner, seconds: float, monitor) -> list[dict]:
     """Timed runs of the workload's operation, each checked afterwards,
-    outside its timing. Returns the runs and the tree's peak RSS."""
+    outside its timing, with the tree's peak RSS during each."""
     from bench import cpu_window, host_cpu_sample, throttle_probe
 
     from perfbench import host
@@ -117,61 +132,77 @@ def measure(runner, seconds: float, monitor) -> tuple[list[dict], int]:
     runs: list[dict] = []
     wire_ref = None
     t_end = time.monotonic() + seconds
-    with host.RssSampler() as rss:
-        while len(runs) < MIN_RUNS or time.monotonic() < t_end:
-            runner.discard_output()
-            probe = throttle_probe()
-            c0, cpu0 = host_cpu_sample(), host.tree_cpu_s()
-            t0 = time.monotonic()
+    while len(runs) < MIN_RUNS or time.monotonic() < t_end:
+        runner.discard_output()
+        probe = throttle_probe()
+        c0, cpu0 = host_cpu_sample(), host.tree_cpu_s()
+        t0 = time.monotonic()
+        with host.RssSampler() as rss:
             try:
                 out, error = runner.op(), None
             except Exception as e:  # counted as a failed run, never dropped
                 # a worker's traceback ends with the error that stopped it
                 last = (str(e).strip().splitlines() or [""])[-1]
                 out, error = None, f"{type(e).__name__}: {last}"[:300]
-            t1 = time.monotonic()
-            cpu1, c1 = host.tree_cpu_s(), host_cpu_sample()
-            attr = {"wall": round(t1 - t0, 4),
-                    "stall": round(monitor.stall_between(t0, t1), 3),
-                    "probe": round(probe, 4)}
-            attr.update(cpu_window(c0, c1, t1 - t0))
-            if error:
-                problems, wire = [error], None
-            else:
-                problems, wire = runner.check(out, wire_ref)
-            if wire_ref is None and not problems:
-                wire_ref = wire
-            runs.append({"wall": t1 - t0, "cpu_s": cpu1 - cpu0, "attr": attr,
-                         "problems": problems, "wire": wire})
-    return runs, rss.peak
+        t1 = time.monotonic()
+        cpu1, c1 = host.tree_cpu_s(), host_cpu_sample()
+        attr = {"wall": round(t1 - t0, 4),
+                "stall": round(monitor.stall_between(t0, t1), 3),
+                "probe": round(probe, 4)}
+        attr.update(cpu_window(c0, c1, t1 - t0))
+        if error:
+            problems, wire = [error], None
+        else:
+            problems, wire = runner.check(out, wire_ref)
+        if wire_ref is None and not problems:
+            wire_ref = wire
+        runs.append({"wall": t1 - t0, "cpu_s": cpu1 - cpu0, "rss": rss.peak,
+                     "attr": attr, "problems": problems, "wire": wire})
+    return runs
 
 
-def end_to_end(pages: int, setups: list[float], runs: list[dict],
-               peak_rss: int) -> dict[str, tuple[float, int]]:
-    """name -> (value, samples), from checked runs only."""
+def end_to_end(setups: list[float], runs: list[dict],
+               heap: int) -> dict[str, tuple[float, int]]:
+    """name -> (value, samples), from checked runs only. ``heap`` is the
+    pinned JVM heap, a constant part of each run's peak RSS."""
     med = statistics.median
     return {
         "setup_s": (med(setups), len(setups)),
-        "pages_per_s": (med([pages / r["wall"] for r in runs]), len(runs)),
+        "run_s": (med([r["wall"] for r in runs]), len(runs)),
         "cpu_s": (med([r["cpu_s"] for r in runs]), len(runs)),
-        "wire_bytes_per_page": (runs[0]["wire"] / pages, len(runs)),
-        "peak_rss_mb": (peak_rss / 1e6, 1),
+        "peak_nonheap_rss_mb": (med([r["rss"] - heap for r in runs]) / 1e6,
+                                len(runs)),
     }
 
 
-def per_layer(runner, untraced_s: float, wire_ref: int,
-              setup_info: dict) -> tuple[dict, list[str], dict]:
-    """The traced pass and the probes: (metrics, problems, layer sum)."""
-    from perfbench import engine, workloads
+def workload_view(w, e2e: dict, runs: list[dict]) -> list[tuple]:
+    """The end-to-end numbers in the workload's own terms, for the human
+    report: ``(name, value, unit, samples)``."""
+    run_s, n = e2e["run_s"]
+    if w.kind == "queries":
+        return [("queries_s", run_s, "s", n)]
+    return [("pages_per_s", statistics.median(w.pages / r["wall"]
+                                              for r in runs), "pages/s", n),
+            ("wire_bytes_per_page", runs[0]["wire"] / w.pages, "B/page", n)]
 
-    w = runner.w
+
+def per_layer(runner, untraced_s: float, wire_ref, setup_info: dict
+              ) -> tuple[dict, list[str], dict]:
+    """The traced pass and the probes: (metrics, problems, layer sum)."""
+    from perfbench import engine, spans
+
     runner.discard_output()
     tp = runner.traced_pass()
     problems, _ = runner.check(tp["out"], wire_ref)
     tr = tp["trace"]
-    layer_sum = tr.layer_sum()
+    wall = tr.spans[0].duration
+    plan = runner.plan_times()
+    engine_s = {c: engine.union_s(ex) for c, ex in tp["executions"].items()}
+    layer_sum = spans.layer_sum(
+        wall, {**{f"{c}.plan": v for c, v in plan.items()},
+               **{f"{c}.engine": v for c, v in engine_s.items()}})
     if not layer_sum["ok"]:
-        problems.append(f"layer self times miss the traced wall by "
+        problems.append(f"the measured layers miss the traced wall by "
                         f"{layer_sum['error']:+.2%}")
     selfs = tr.self_by_name()
     route = tp["sql"].get("plans.pipeline", [])
@@ -180,17 +211,17 @@ def per_layer(runner, untraced_s: float, wire_ref: int,
     def sql(rows, node, *metrics, scale=1.0):
         return sum(engine.metric_sum(rows, node, m) for m in metrics) * scale
 
-    counts = workloads.sink_counts(workloads.read_sink(runner.output_sink()))
     st = tp["stages"]
-    m = {
-        "trace.wall_s": tr.spans[0].duration,
+    m = dict.fromkeys(PER_LAYER, 0.0)
+    m.update({
+        "trace.wall_s": wall,
         "trace.untraced_median_s": untraced_s,
-        "trace.overhead_s": tr.spans[0].duration - untraced_s,
+        "trace.overhead_s": wall - untraced_s,
+        "trace.engine_s": sum(engine_s.values()),
         "trace.layer_sum_error": layer_sum["error"],
         "trace.stage_overlap_s": tp["overlap_s"],
         "self.unattributed_s": selfs[tr.spans[0].name],
         **{k: selfs.get(k[len("self."):-len("_s")], 0.0) for k in _SELF},
-        "plans.parse_enrich.s": runner.parse_enrich_s(),
         "plans.exchange.shuffle_bytes": sql(route, "Exchange",
                                             "shuffle bytes written"),
         "plans.exchange.write_s": sql(route, "Exchange", "shuffle write time",
@@ -210,34 +241,32 @@ def per_layer(runner, untraced_s: float, wire_ref: int,
         "plans.route.bytes": sql(route, _WRITE, "written output"),
         "plans.route.commit_s": sql(route, _WRITE, "job commit time",
                                     "task commit time", scale=1e-3),
-        "plans.aggregate.s": sum(sp.duration for sp in tr.spans
-                                 if sp.name == "plans.aggregate"),
         "plans.decode.python_s": sql(verify, _UDF,
                                      "time to run Python workers", scale=1e-3),
         "plans.decode.bytes_to_python": sql(verify, _UDF,
                                             "data sent to Python workers"),
         "plans.verify.shuffle_bytes": sql(verify, "Exchange",
                                           "shuffle bytes written"),
-        "codec.raw_bytes_per_page": counts["raw_bytes"] / w.pages,
-        "codec.blobs": counts["blobs"],
-        "codec.zstd_ratio": counts["raw_bytes"] / counts["wire_bytes"],
-        **runner.kernel_rates(),
         "jvm.executor_run_s": sum(x["run_s"] for x in st),
         "jvm.executor_cpu_s": sum(x["cpu_s"] for x in st),
         "jvm.gc_s": sum(x["gc_s"] for x in st),
         "jvm.spill_bytes": sum(x["spill_bytes"] for x in st),
         "jvm.peak_execution_memory_bytes": max(
             (x["peak_execution_memory_bytes"] for x in st), default=0),
-        "driver.plan_s": runner.plan_s(),
+        "jvm.peak_heap_bytes": engine.peak_heap_bytes(runner.spark),
+        "driver.plan_s": sum(plan.values()),
+        **{f"{c}.plan_s": v for c, v in plan.items()
+           if c.startswith("operators.")},
         "setup.session_start_s": setup_info["session_start_s"],
-        "setup.sink_write_s": setup_info.get("setup.sink_write_s", 0.0),
-        "setup.warmup_s": setup_info["setup.warmup_s"],
-    }
+        **{k: v for k, v in setup_info.items() if k.startswith("setup.")},
+        **runner.layer_metrics(tp),
+    })
     if m.keys() != PER_LAYER.keys():
         raise RuntimeError(f"per-layer names drifted: {m.keys() ^ PER_LAYER}")
-    spans = [(sp.name, sp.duration, tr.self_time(i))
-             for i, sp in enumerate(tr.spans)]
-    return m, problems, {**layer_sum, "spans": spans}
+    rows = [(sp.name, sp.duration, tr.self_time(i))
+            for i, sp in enumerate(tr.spans)]
+    return m, problems, {**layer_sum, "spans": rows, "plan": plan,
+                         "engine": engine_s}
 
 
 def _fmt(v) -> str:
@@ -264,7 +293,7 @@ def run(args) -> int:
         phases = {"setups": time.monotonic()}
         warmup = runner.warm_up()
         phases["warm-up"] = time.monotonic()
-        runs, peak_rss = measure(runner, args.seconds, monitor)
+        runs = measure(runner, args.seconds, monitor)
         phases["timed runs"] = time.monotonic()
         good = [r for r in runs if not r["problems"]]
         if args.trace and good:
@@ -279,10 +308,15 @@ def run(args) -> int:
         shutil.rmtree(workdir, ignore_errors=True)
     phases["shutdown"] = time.monotonic()
 
-    lo, hi = workloads.doc_id_window(args.seed, w.pages)
     failed = [r for r in runs if r["problems"]]
-    print(f"workload {w.name}: {w.pages} pages, seed {args.seed} -> doc_id "
-          f"window [{lo}, {hi}), {args.seconds:g} s measured, "
+    if w.pages:
+        lo, hi = workloads.doc_id_window(args.seed, w.pages)
+        inputs = (f"{w.pages} pages, seed {args.seed} -> doc_id window "
+                  f"[{lo}, {hi})")
+    else:
+        inputs = (f"the fixed seed-42 sf0.1 tables (seed {args.seed} "
+                  "changes nothing)")
+    print(f"workload {w.name}: {inputs}, {args.seconds:g} s measured, "
           f"{len(runs)} runs")
     print("phases end at (s): " + ", ".join(
         f"{k} {v - T0:.1f}" for k, v in phases.items()))
@@ -301,16 +335,24 @@ def run(args) -> int:
         print(json.dumps(result))
         return 1
 
-    e2e = end_to_end(w.pages, setups, runs if layers is None else runs[:-1],
-                     peak_rss)
+    timed = runs if layers is None else runs[:-1]
+    e2e = end_to_end(setups, timed, workloads.heap_bytes())
     for name, (v, n) in e2e.items():
         print(f"  {name:<22} {_fmt(v):>14} {END_TO_END[name]:<8} "
               f"samples={n}")
+    peak_rss = statistics.median(r["rss"] for r in timed) / 1e6
+    print(f"  {'peak_rss_mb':<22} {_fmt(peak_rss):>14} {'MB':<8} "
+          f"samples={len(timed)} (heap included)")
+    for name, v, unit, n in workload_view(w, e2e, timed):
+        print(f"  {name:<22} {_fmt(v):>14} {unit:<8} samples={n}")
     metrics, units = {k: v for k, (v, _) in e2e.items()}, END_TO_END
     if layers is not None:
         print("traced pass (span, wall s, self s):")
         for name, dur, self_s in layer_sum["spans"]:
             print(f"  {name:<36} {dur:10.4f} {self_s:10.4f}")
+        print("layers measured apart (call: planning s, engine s):")
+        for c, plan_s in layer_sum["plan"].items():
+            print(f"  {c:<36} {plan_s:10.4f} {layer_sum['engine'][c]:10.4f}")
         verdict = "holds" if layer_sum["ok"] else "BROKEN"
         print(f"layer-sum rule {verdict}: layers {layer_sum['layers']:.4f} s"
               f" vs traced wall {layer_sum['wall']:.4f} s, error "

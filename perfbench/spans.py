@@ -4,11 +4,17 @@ A span is a layer boundary: a name, a start, an end and the span that
 caused it. All times of one trace are on one clock, epoch seconds, so the
 benchmark's own spans and the Spark stage intervals read back from the
 engine's status store line up. A span's self time is its duration minus
-the part of it that its children cover. The layer-sum rule: the self
-times of all layers (every span but the root) add up to the root's wall
-within ``LAYER_SUM_TOLERANCE`` of it. Time no layer claims (a gap between
-spans) or claimed twice (overlapping siblings, a child outside its
-parent) breaks the rule.
+the part of it that its children cover; self times are a report, and they
+add up to the root's wall by construction.
+
+The layer-sum rule checks what self times cannot: that layers measured
+apart from each other and from the traced wall account for it. Each call
+into the package is two such layers, the driver's planning (timed by
+repeating it outside the traced pass) and the engine's SQL executions (as
+the engine stamped them). Their sum must come within
+``LAYER_SUM_TOLERANCE`` of the traced wall. Time no layer measured (Python
+work between calls, jobs outside any SQL execution) makes the error
+positive; layers that overlap or were measured long make it negative.
 """
 
 from __future__ import annotations
@@ -17,9 +23,11 @@ import time
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-#: the largest share of the traced wall by which the summed layer self
-#: times may differ from it
-LAYER_SUM_TOLERANCE = 0.05
+#: the largest share of the traced wall by which the summed layers may
+#: differ from it. Measured errors stay within ±5% on a 4-vCPU VM; the
+#: margin is for a stall of the host during the traced pass, which would
+#: lengthen the wall but not the planning probes
+LAYER_SUM_TOLERANCE = 0.10
 
 
 @dataclass
@@ -102,10 +110,12 @@ class Trace:
             out[sp.name] = out.get(sp.name, 0.0) + self.self_time(i)
         return out
 
-    def layer_sum(self, tolerance: float = LAYER_SUM_TOLERANCE) -> dict:
-        """Check the layer-sum rule against the root span's wall."""
-        wall = self.spans[0].duration
-        layers = sum(self.self_time(i) for i in range(1, len(self.spans)))
-        error = (wall - layers) / wall if wall > 0 else float("inf")
-        return {"wall": wall, "layers": layers, "error": error,
-                "tolerance": tolerance, "ok": abs(error) <= tolerance}
+
+def layer_sum(wall: float, layers: dict[str, float],
+              tolerance: float = LAYER_SUM_TOLERANCE) -> dict:
+    """Check independently measured ``layers`` (name -> seconds) against
+    the traced ``wall``."""
+    total = sum(layers.values())
+    error = (wall - total) / wall if wall > 0 else float("inf")
+    return {"wall": wall, "layers": total, "error": error,
+            "tolerance": tolerance, "ok": abs(error) <= tolerance}

@@ -2,8 +2,8 @@
 
     python -m pytest perfbench/tests -q
 
-The names test and the layer-sum tests need no JVM; the corrupted-blob
-test starts one local Spark session (about a minute).
+Only the corrupted-blob test starts a JVM: one local Spark session (about
+a minute).
 """
 
 from __future__ import annotations
@@ -14,11 +14,12 @@ import shutil
 import subprocess
 import sys
 
+import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
-from perfbench import engine, run, workloads
-from perfbench.spans import LAYER_SUM_TOLERANCE, Trace
+from perfbench import engine, host, run, workloads
+from perfbench.spans import LAYER_SUM_TOLERANCE, Trace, layer_sum
 
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
@@ -38,14 +39,21 @@ def test_names_and_units_match_benchmark_json():
 
 
 def test_end_to_end_reports_every_metric():
-    runs = [{"wall": w, "cpu_s": 2.0 * w, "wire": 500}
+    runs = [{"wall": w, "cpu_s": 2.0 * w, "rss": 1e6 * w + 2e6, "wire": 500}
             for w in (1.0, 2.0, 4.0)]
-    got = run.end_to_end(10, [9.0, 1.0, 2.0], runs, 3_000_000)
+    got = run.end_to_end([9.0, 1.0, 2.0], runs, 2_000_000)
     assert got.keys() == run.END_TO_END.keys()
     assert got["setup_s"] == (2.0, 3)
-    assert got["pages_per_s"] == (5.0, 3)
+    assert got["run_s"] == (2.0, 3)
     assert got["cpu_s"] == (4.0, 3)
-    assert got["wire_bytes_per_page"] == (50.0, 3)
+    assert got["peak_nonheap_rss_mb"] == (2.0, 3)
+    pages = workloads.WORKLOADS["roundtrip_unique"]
+    view = {n: v for n, v, _, _ in run.workload_view(pages, got, runs)}
+    assert view == {"pages_per_s": pages.pages / 2.0,
+                    "wire_bytes_per_page": 500 / pages.pages}
+    queries = workloads.WORKLOADS["driver_queries"]
+    assert run.workload_view(queries, got, runs) == [("queries_s", 2.0, "s",
+                                                      3)]
 
 
 def _trace(*children) -> Trace:
@@ -56,35 +64,63 @@ def _trace(*children) -> Trace:
     return tr
 
 
-def test_layer_sum_holds_when_layers_tile_the_wall():
+def test_self_times_subtract_covered_children():
     tr = _trace(("a", 0.0, 4.0), ("b", 4.0, 10.0))
     b = tr.spans.index(next(s for s in tr.spans if s.name == "b"))
     tr.add("b.stage", 5.0, 9.0, b)
-    res = tr.layer_sum()
-    assert res["ok"] and abs(res["error"]) < 1e-12
     assert tr.self_time(b) == pytest.approx(2.0)
     assert tr.self_by_name() == pytest.approx(
         {"root": 0.0, "a": 4.0, "b": 2.0, "b.stage": 4.0})
 
 
-def test_layer_sum_breaks_on_a_gap_and_on_overlap():
-    gap = _trace(("a", 0.0, 4.0), ("b", 5.0, 10.0)).layer_sum()
-    assert not gap["ok"] and gap["error"] == pytest.approx(0.1)
-    both = _trace(("a", 0.0, 6.0), ("b", 4.0, 10.0)).layer_sum()
-    assert not both["ok"] and both["error"] == pytest.approx(-0.2)
-    # a small gap stays inside the stated tolerance
-    small = _trace(("a", 0.0, 4.0), ("b", 4.2, 10.0)).layer_sum()
-    assert small["ok"] and small["error"] < LAYER_SUM_TOLERANCE
-
-
-def test_attached_stages_keep_the_layer_sum():
+def test_attached_stages_report_their_overlap():
     tr = _trace(("job", 0.0, 10.0))
     overlap = tr.attach(1, [("job.map_stages", -0.001, 4.0),
                             ("job.map_stages", 3.0, 6.0),
                             ("job.reduce_stages", 6.0, 9.5)])
     assert overlap == pytest.approx(1.0)
-    assert tr.layer_sum()["ok"]
     assert tr.self_by_name()["job"] == pytest.approx(0.5)
+
+
+def _synthetic_layers(tr: Trace, executions: dict, plan: dict) -> dict:
+    """The layers run.per_layer checks: per call, the planning probe and
+    the union of the engine's SQL executions."""
+    return {**{f"{c}.plan": v for c, v in plan.items()},
+            **{f"{c}.engine": engine.union_s(ex)
+               for c, ex in executions.items()}}
+
+
+def test_layer_sum_holds_when_measured_layers_cover_the_wall():
+    tr = _trace(("write", 0.0, 7.0), ("read", 7.0, 10.0))
+    layers = _synthetic_layers(
+        tr, {"write": [(0.5, 4.0), (3.5, 6.9)], "read": [(7.2, 9.95)]},
+        {"write": 0.45, "read": 0.2})
+    assert layers["write.engine"] == pytest.approx(6.4)
+    res = layer_sum(tr.spans[0].duration, layers)
+    assert res["ok"] and abs(res["error"]) < LAYER_SUM_TOLERANCE
+
+
+def test_layer_sum_breaks_on_unmeasured_time_and_on_double_counting():
+    tr = _trace(("write", 0.0, 7.0), ("read", 7.0, 10.0))
+    # a second of driver work no layer measured
+    gap = layer_sum(10.0, _synthetic_layers(
+        tr, {"write": [(0.5, 6.0)], "read": [(7.2, 9.95)]},
+        {"write": 0.45, "read": 0.2}))
+    assert not gap["ok"] and gap["error"] == pytest.approx(0.11)
+    # a planning probe that also timed work the engine layer holds
+    long = layer_sum(10.0, _synthetic_layers(
+        tr, {"write": [(0.5, 6.9)], "read": [(7.2, 9.95)]},
+        {"write": 2.0, "read": 0.2}))
+    assert not long["ok"] and long["error"] == pytest.approx(-0.135)
+
+
+def test_rss_peak_ignores_a_single_sample_spike(monkeypatch):
+    samples = iter([100, 5000, 120, 130, 90])
+    monkeypatch.setattr(host, "tree_rss_bytes", lambda: next(samples))
+    sampler = host.RssSampler()
+    for _ in range(5):
+        sampler._sample()
+    assert sampler.peak == 120
 
 
 def test_metric_display_strings_parse_back():
@@ -103,12 +139,39 @@ def test_seed_picks_a_doc_id_window():
     assert (lo, hi) == (300, 400)
 
 
+def test_query_tables_match_their_checksums(tmp_path):
+    workloads.verify_tables()
+    copy = tmp_path / "sf"
+    shutil.copytree(workloads.SF_DIR, copy)
+    with open(copy / "region.parquet", "r+b") as f:
+        f.seek(100)
+        byte = f.read(1)
+        f.seek(100)
+        f.write(bytes([byte[0] ^ 0xFF]))
+    with pytest.raises(RuntimeError, match="region.parquet"):
+        workloads.verify_tables(str(copy))
+
+
+def test_queries_check_flags_a_wrong_value():
+    runner = workloads.make_runner(workloads.WORKLOADS["driver_queries"],
+                                   seed=1, workdir="unused")
+    frame = pd.DataFrame({"k": [2, 1], "v": [0.5, 1.25]})
+    runner.oracle = {q: workloads.normalize(frame) for q in run.QUERIES}
+    out = {q: frame.copy() for q in run.QUERIES}
+    assert runner.check(out, None) == ([], None)
+    out["dedup_minhash_lsh"].loc[0, "v"] = 0.75
+    out["tpch_q1"] = frame.iloc[:1]
+    problems, _ = runner.check(out, None)
+    assert [p.split(":")[0] for p in problems] == ["tpch_q1",
+                                                   "dedup_minhash_lsh"]
+
+
 def test_refuses_to_run_without_the_package(tmp_path):
     shutil.copytree(os.path.join(ROOT, "perfbench"), tmp_path / "perfbench",
                     ignore=shutil.ignore_patterns("__pycache__"))
     shutil.copy(os.path.join(ROOT, "BENCHMARK.json"), tmp_path)
     p = subprocess.run(
-        [sys.executable, "perfbench/run.py", "--workload", "export_unique",
+        [sys.executable, "perfbench/run.py", "--workload", "roundtrip_unique",
          "--seed", "1", "--seconds", "1", "--trace", "0"],
         cwd=tmp_path, capture_output=True, text=True, timeout=60)
     assert p.returncode == 2 and p.stdout == ""
@@ -137,22 +200,25 @@ def _flip_one_blob_byte(sink: str) -> None:
     os.remove(os.path.join(d, f".{f}.crc"))
 
 
-def test_flipped_sink_byte_fails_receive(tmp_path):
+def test_flipped_sink_byte_fails_receive(tmp_path, monkeypatch):
     from bench import StallMonitor
 
-    w = workloads.Workload("receive_small", "receive", True, 2_000,
-                           warmups=1)
+    w = workloads.Workload("roundtrip_small", "roundtrip", 2_000, warmups=1)
     workdir = str(tmp_path / "work")
     workloads.prepare_env(workdir, ROOT)
     runner = workloads.make_runner(w, seed=1, workdir=workdir)
     try:
         runner.setup_once()
         runner.warm_up()
-        clean, _ = run.measure(runner, 0, StallMonitor())
+        clean = run.measure(runner, 0, StallMonitor())
         assert [r["problems"] for r in clean] == [[]] * run.MIN_RUNS
+        # from here each run receives the last export's sink, damaged
+        rows = runner.export()
+        monkeypatch.setattr(runner, "export", lambda: rows)
+        monkeypatch.setattr(runner, "discard_output", lambda: None)
         _flip_one_blob_byte(runner.sink)
-        runs, _ = run.measure(runner, 0, StallMonitor())
+        runs = run.measure(runner, 0, StallMonitor())
     finally:
-        runner.spark.stop()
+        runner.close()
     failed = sum(1 for r in runs if r["problems"])
     assert failed / len(runs) > 0

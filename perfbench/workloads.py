@@ -1,10 +1,15 @@
 """The benchmark's workloads: set-up, the timed operation, its check, and
 the traced pass. Everything reaches the package through its public stage
-functions; nothing here changes how the package runs.
+functions; nothing here changes how the package runs. The one exception is
+the encode-kernel probe: it builds its sample with the frame builder the
+shipped encoder and ``scripts/profile_arms.py`` share, so the probe times
+the frame the pipeline encodes.
 """
 
 from __future__ import annotations
 
+import hashlib
+import inspect
 import os
 import shutil
 import signal
@@ -14,17 +19,17 @@ import sys
 import tempfile
 import time
 from dataclasses import dataclass
+from unittest import mock
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as pads
-from compress_otel_collector_spark.codec.batch import (
-    SPAN_COLUMNS,
-    encode_span_dataframe,
-)
+import pyarrow.parquet as pq
+from compress_otel_collector_spark.codec.batch import encode_span_dataframe
 from compress_otel_collector_spark.codec.definition import trace_model
 from compress_otel_collector_spark.plans.pipeline import (
+    _group_spans_frame,
+    aggregate_stage,
     encode_pages,
     enrich_stage,
     expected_roundtrip,
@@ -36,10 +41,17 @@ from compress_otel_collector_spark.plans.pipeline import (
     span_stage,
 )
 from compress_otel_collector_spark.plans.projector import project_blob
-from compress_otel_collector_spark.sources.tables import synthetic_pages
+from compress_otel_collector_spark.sources.tables import (
+    load_table,
+    synthetic_pages,
+)
+from pyspark.sql import functions as F
 
 from . import engine, host
+from .run import QUERIES
 from .spans import Trace
+
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 #: distinct doc_id windows a seed can pick; window w covers doc_ids
 #: [w * pages, (w + 1) * pages) of the package's synthetic pages generator
@@ -49,28 +61,34 @@ SEED_WINDOWS = 16
 KERNEL_SAMPLE_SPANS = 2000
 KERNEL_PROBE_S = 0.4
 
+#: the fixed seed-42 sf0.1 tables the driver queries read, kept beside the
+#: benchmark with their checksums (the tables the queries below touch)
+SF_DIR = os.path.join(HERE, "data", "sf0.1")
+
+#: how the pipeline encodes: every n-th page carries an event or a link
+_ENCODE_DEFAULTS = inspect.signature(encode_pages).parameters
+
 
 @dataclass(frozen=True)
 class Workload:
     name: str
-    kind: str          # "export" or "receive": the runner class below
-    realistic: bool    # synthetic_pages(realistic=...): url/text repeats
+    kind: str          # "roundtrip" or "queries": the runner below
+    #: synthetic pages per run (0: the workload reads fixed tables)
     pages: int
-    #: untimed passes before the timed runs. The first pays codegen and
-    #: Python worker imports (about 3x a steady run); the JIT keeps
-    #: shortening the runs after it, by about 25% over the next four on
-    #: the receiver and 15% over the next three on the exporter
+    #: untimed passes before the timed runs; the first pays codegen and
+    #: Python worker imports, the JIT keeps shortening the next one
     warmups: int
 
 
 WORKLOADS = {w.name: w for w in (
-    # the exporter on pages whose every url and id is unique: large pools,
-    # so the Python encode (pools, varints, zstd) does most of the work
-    Workload("export_unique", "export", False, 10_000, warmups=3),
-    # the receiver alone, over a sink of the telemetry-repeats shape written
-    # during set-up: tiny pools, high compression, so a dictionary or
-    # row-order change that costs this shape shows in its wire bytes
-    Workload("receive_roundtrip", "receive", True, 10_000, warmups=4),
+    # the exporter/receiver pair on pages whose every url and id is
+    # unique: large pools, so the Python encode (pools, varints, zstd) and
+    # the decode do most of the work, and neither runs as one lone task
+    Workload("roundtrip_unique", "roundtrip", 60_000, warmups=1),
+    # the eight operator queries over the fixed sf0.1 tables: planning and
+    # the operators module, no codec. Each query's code keeps getting
+    # faster over the first passes, so two untimed ones
+    Workload("driver_queries", "queries", 0, warmups=2),
 )}
 
 
@@ -94,29 +112,36 @@ def prepare_env(workdir: str, root: str) -> None:
     os.environ["PYTHONPATH"] = root + (os.pathsep + path if path else "")
 
 
+def heap_bytes() -> int:
+    """The driver's heap: a quarter of host memory, 1 to 8 GiB."""
+    return max(1, min(8, host.host_mem_bytes() // 4 // 2**30)) * 2**30
+
+
 def session_conf(workdir: str) -> dict[str, str]:
     """One local driver sized to this host: every core it may run on, and
-    a quarter of its memory (at least 1 GiB, at most 8 GiB) for the heap."""
+    ``heap_bytes()`` of heap."""
     cores = len(os.sched_getaffinity(0))
-    heap_gb = max(1, min(8, host.host_mem_bytes() // 4 // 2**30))
+    heap_mb = heap_bytes() // 2**20
     tmp = os.path.join(workdir, "tmp")
     # the heap is committed and touched at its full size when the JVM
-    # starts, so the tree's peak RSS moves only with memory outside it
-    # (Python workers, Arrow buffers, JVM native memory), not with when
-    # the collector chooses to grow the heap
-    # (no hsperfdata file either: the JVM would write it to /tmp)
-    java_opts = (f"-Xms{heap_gb}g -XX:+AlwaysPreTouch -XX:-UsePerfData "
+    # starts, so it is a constant in the tree's RSS: RSS less the heap is
+    # the memory outside it (JVM native memory, the driver and the Python
+    # workers), free of when the collector chooses to grow the heap. The
+    # heap's own use is read from the engine (no hsperfdata file: the JVM
+    # would write it to /tmp)
+    java_opts = (f"-Xms{heap_mb}m -XX:+AlwaysPreTouch -XX:-UsePerfData "
                  f"-Djava.io.tmpdir={tmp}")
     return {
         "spark.master": f"local[{cores}]",
         "spark.app.name": "perfbench",
-        "spark.driver.memory": f"{heap_gb}g",
+        "spark.driver.memory": f"{heap_mb}m",
         "spark.driver.extraJavaOptions": java_opts,
         "spark.local.dir": os.path.join(workdir, "local"),
         "spark.sql.warehouse.dir": os.path.join(workdir, "warehouse"),
         "spark.sql.shuffle.partitions": str(cores * 4),
         "spark.sql.session.timeZone": "UTC",
         "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
         "spark.sql.adaptive.enabled": "true",
         # bench.make_spark's batch size: blob boundaries follow Arrow
         # batches, so wire bytes compare with the published numbers
@@ -148,7 +173,7 @@ def materialize_pages(spark, path: str, w: Workload, seed: int) -> None:
     """
     lo, hi = doc_id_window(seed, w.pages)
     slices = spark.sparkContext.defaultParallelism * (hi // w.pages)
-    (synthetic_pages(spark, hi, partitions=slices, realistic=w.realistic)
+    (synthetic_pages(spark, hi, partitions=slices)
      .where(f"doc_id >= {lo}")
      .write.parquet(path))
 
@@ -189,6 +214,67 @@ def sink_counts(table: pa.Table) -> dict:
     }
 
 
+def verify_tables(sf_dir: str = SF_DIR) -> None:
+    """Refuse tables whose bytes differ from the recorded checksums."""
+    with open(os.path.join(sf_dir, "SHA256SUMS")) as f:
+        for line in f:
+            digest, name = line.split()
+            with open(os.path.join(sf_dir, name), "rb") as t:
+                if hashlib.sha256(t.read()).hexdigest() != digest:
+                    raise RuntimeError(f"{name} differs from its checksum")
+
+
+def normalize(df: pd.DataFrame) -> pd.DataFrame:
+    """A query result in comparable form: columns by name, rows sorted,
+    numbers widened (the driver-contract tests' comparison)."""
+    df = df[sorted(df.columns)].copy()
+    for c in df.columns:
+        if pd.api.types.is_integer_dtype(df[c]):
+            df[c] = df[c].astype("int64")
+        elif pd.api.types.is_float_dtype(df[c]):
+            df[c] = df[c].astype("float64")
+        elif pd.api.types.is_bool_dtype(df[c]):
+            df[c] = df[c].astype("bool")
+    return df.sort_values(list(df.columns), ignore_index=True)
+
+
+def oracle_frames(workdir: str, sf_dir: str = SF_DIR) -> dict:
+    """Each query's DuckDB twin from ``__spark_entry__.oracle_sql()``, run
+    once over views of the tables, normalized.
+
+    The token_count twin joins a side table of per-text BPE counts. It is
+    written here, into ``workdir``, from this directory's documents only.
+    """
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from compress_otel_collector_spark.operators.bpe import bpe_count
+
+    side = os.path.join(workdir, "bpe_side.parquet")
+    texts = {""} | {t or "" for t in pq.read_table(
+        os.path.join(sf_dir, "documents.parquet"),
+        columns=["text"]).column("text").to_pylist()}
+    rows = sorted((hashlib.md5(t.encode("utf-8")).hexdigest(), bpe_count(t))
+                  for t in texts)
+    pq.write_table(pa.table({
+        "text_md5": [r[0] for r in rows],
+        "bpe_tokens": pa.array([r[1] for r in rows], pa.int64())}), side)
+    # the twins read the side table at this path; keep oracle_sql() from
+    # writing its own outside the checkout
+    with mock.patch.object(entrymod, "_BPE_SIDE_PATH", side), \
+            mock.patch.object(entrymod, "_write_bpe_side_table"):
+        sql = entrymod.oracle_sql()
+    con = duckdb.connect()
+    try:
+        for f in sorted(os.listdir(sf_dir)):
+            if f.endswith(".parquet"):
+                con.sql(f"CREATE VIEW {f[:-len('.parquet')]} AS SELECT * "
+                        f"FROM '{os.path.join(sf_dir, f)}'")
+        return {q: normalize(con.sql(sql[q]).df()) for q in QUERIES}
+    finally:
+        con.close()
+
+
 # ---------------------------------------------------------------- runners
 
 class Runner:
@@ -200,8 +286,6 @@ class Runner:
         self.seed = seed
         self.workdir = workdir
         self.spark = None
-        self.pages_path = ""
-        self.routes: dict = {}
         self.session_walls: list[float] = []
         self._dirs = 0
 
@@ -209,33 +293,33 @@ class Runner:
         self._dirs += 1
         return os.path.join(self.workdir, f"{kind}{self._dirs}")
 
-    def pages_frame(self):
-        return self.spark.read.parquet(self.pages_path)
+    # ---- what each workload defines
 
-    # ---- what each operation defines
+    def prepare_set_up(self) -> None:
+        """The set-up's input work, after the session has (re)started."""
 
     def op(self):
         """One timed run of the operation; returns what ``check`` reads."""
         raise NotImplementedError
 
-    def check(self, out, wire_ref: int | None) -> tuple[list[str], int]:
-        """Problems found in one run's outputs, and the wire bytes."""
-        raise NotImplementedError
-
-    def output_sink(self) -> str:
-        """The sink the last run wrote or read."""
-        raise NotImplementedError
-
-    def plan_frame(self):
-        """The DataFrame whose planning ``plan_s`` times."""
+    def check(self, out, wire_ref: int | None) -> tuple[list[str], object]:
+        """Problems found in one run's outputs, and the run's wire bytes
+        (None where the workload writes no wire)."""
         raise NotImplementedError
 
     def traced_calls(self, tr: Trace, root: int) -> tuple[object, list[int]]:
         """The operation with a span around each call into the package;
-        returns its output and the spans of the calls that ran jobs."""
+        returns its output and the spans of the calls."""
         raise NotImplementedError
 
-    def prepare_input(self) -> dict[str, float]:
+    def plan_probes(self) -> dict[str, object]:
+        """Per call span name: a callable that repeats the call's own
+        driver-side work (DataFrame build plus physical planning) and
+        returns the seconds it took."""
+        raise NotImplementedError
+
+    def layer_metrics(self, tp: dict) -> dict[str, float]:
+        """The workload's own per-layer metrics from a traced pass."""
         return {}
 
     def discard_output(self) -> None:
@@ -244,47 +328,37 @@ class Runner:
     # ---- shared
 
     def setup_once(self) -> float:
-        """Start (or restart) the session and materialize the seed's pages
-        into a fresh directory; returns the seconds it took."""
+        """Start (or restart) the session and prepare the input; returns
+        the seconds it took."""
         t0 = time.monotonic()
         if self.spark is not None:
             self.spark.stop()
         self.spark = start_session(self.workdir)
         self.session_walls.append(time.monotonic() - t0)
-        old = self.pages_path
-        self.pages_path = self._fresh("pages")
-        materialize_pages(self.spark, self.pages_path, self.w, self.seed)
-        dt = time.monotonic() - t0
-        if old:
-            shutil.rmtree(old, ignore_errors=True)
-        return dt
+        self.prepare_set_up()
+        return time.monotonic() - t0
 
     def warm_up(self) -> dict[str, float]:
-        """Prepare the operation's input, run the workload's untimed
-        warm-up passes, and count the source pages per route for the
-        checks. Returns the seconds each step took."""
-        walls = self.prepare_input()
+        """Run the workload's untimed warm-up passes. Returns the seconds
+        each step took."""
         t0 = time.monotonic()
         for _ in range(self.w.warmups):
             self.op()
             self.discard_output()
-        walls["setup.warmup_s"] = time.monotonic() - t0
-        self.routes = expected_routes(self.spark, self.pages_path)
-        return walls
+        return {"setup.warmup_s": time.monotonic() - t0}
 
     def close(self) -> None:
         """Stop the session, the JVM and the Python workers it forked, and
         wait until each process has ended."""
-        if self.spark is None:
-            return
         from pyspark import SparkContext
 
-        gateway = SparkContext._gateway
-        kids = [p for p in host.tree_pids() if p != os.getpid()]
-        self.spark.stop()
-        self.spark = None
+        gateway = SparkContext._gateway  # set once the JVM is launched
         if gateway is None:
             return
+        kids = [p for p in host.tree_pids() if p != os.getpid()]
+        if self.spark is not None:
+            self.spark.stop()
+            self.spark = None
         gateway.shutdown()
         proc = gateway.proc
         proc.stdin.close()  # the JVM exits when its stdin closes
@@ -305,131 +379,96 @@ class Runner:
         call into the package, and the Spark stages of each call attached
         beneath it.
 
-        Returns the trace, the operation's output, the SQL metrics of the
-        plans each call ran (by span name), the stages of the whole pass,
+        Returns the trace, the operation's output, by call span name the
+        SQL metrics of the plans the call ran and the SQL-execution
+        intervals the engine stamped for it, the stages of the whole pass,
         and the seconds of stage concurrency attributed first come.
         """
         tr = Trace()
         with tr.span(self.w.kind) as root:
             out, calls = self.traced_calls(tr, root)
-        overlap = 0.0
-        for c in calls:
-            sp = tr.spans[c]
-            stages = engine.stages_between(self.spark, sp.start, sp.end)
-            overlap += tr.attach(c, engine.stage_intervals(stages, sp.name))
+        # an engine stamp belongs to the call it was submitted in; stamps
+        # are whole ms, so a call's window opens a little early
+        opens = [tr.spans[c].start - engine.STAMP_SLACK_S for c in calls]
+        windows = zip(opens, opens[1:] + [tr.spans[root].end])
+        overlap, sql, executions = 0.0, {}, {}
+        for c, (t0, t1) in zip(calls, windows):
+            name = tr.spans[c].name
+            stages = engine.stages_between(self.spark, t0, t1)
+            overlap += tr.attach(c, engine.stage_intervals(stages, name))
+            sql[name] = engine.sql_metrics_between(self.spark, t0, t1)
+            executions[name] = engine.sql_executions_between(
+                self.spark, t0, t1)
         root_sp = tr.spans[root]
+        stages = engine.stages_between(
+            self.spark, root_sp.start - engine.STAMP_SLACK_S, root_sp.end)
         return {
             "trace": tr,
             "out": out,
-            "sql": {tr.spans[c].name: engine.sql_metrics_between(
-                self.spark, tr.spans[c].start, tr.spans[c].end)
-                for c in calls},
-            "stages": engine.stages_between(self.spark, root_sp.start,
-                                            root_sp.end),
+            "sql": sql,
+            "executions": executions,
+            "stages": stages,
             "overlap_s": overlap,
         }
 
-    def plan_s(self, reps: int = 3) -> float:
-        """Driver-side DataFrame build plus physical planning, the way
-        ``bench_extra.py --queries`` splits a query: median of ``reps``."""
-        walls = []
-        for _ in range(reps):
-            t0 = time.monotonic()
-            self.plan_frame()._jdf.queryExecution().executedPlan()
-            walls.append(time.monotonic() - t0)
-        return statistics.median(walls)
-
-    def parse_enrich_s(self, reps: int = 3) -> float:
-        """Noop-sink wall of scan → parse → enrich, median of ``reps``."""
-        walls = []
-        for _ in range(reps):
-            t0 = time.monotonic()
-            (enrich_stage(parse_stage(self.pages_frame()), self.spark)
-             .write.format("noop").mode("overwrite").save())
-            walls.append(time.monotonic() - t0)
-        return statistics.median(walls)
-
-    def kernel_rates(self) -> dict[str, float]:
-        """Single-thread driver timings of the codec kernels on a fixed
-        sample of this workload's own blobs (routes in key order, whole
-        blobs until ``KERNEL_SAMPLE_SPANS`` spans) and span rows."""
-        zstd = pa.Codec("zstd")
-        table = read_sink(self.output_sink()).sort_by(
-            [("lang", "ascending"), ("host_bucket", "ascending"),
-             ("raw_bytes", "ascending")])
-        raws, spans = [], 0
-        for blob, raw_len, n in zip(table.column("blob").to_pylist(),
-                                    table.column("raw_bytes").to_pylist(),
-                                    table.column("n_spans").to_pylist()):
-            raws.append(zstd.decompress(blob, decompressed_size=raw_len,
-                                        asbytes=True))
-            spans += n
-            if spans >= KERNEL_SAMPLE_SPANS:
-                break
-        model = trace_model()
-        raw_bytes = sum(len(r) for r in raws)
-        frame, attrs_spec, resource = self._encode_sample()
-        return {
-            "codec.encode_spans_per_s": len(frame) / _rep_time(
-                lambda: encode_span_dataframe(
-                    frame, attributes_spec=attrs_spec,
-                    resource_attrs_for=resource)),
-            "codec.zstd_mb_per_s": raw_bytes / 1e6 / _rep_time(
-                lambda: [zstd.compress(r, asbytes=True) for r in raws]),
-            "projector.spans_per_s": spans / _rep_time(
-                lambda: [project_blob(r, model) for r in raws]),
-        }
-
-    def _encode_sample(self):
-        """The first route's first ``KERNEL_SAMPLE_SPANS`` span rows, as the
-        public span stage derives them, in the codec's frame shape: span
-        columns plus one ``attr:<key>`` column per attribute, no events or
-        links."""
-        lang, bucket = min(self.routes, key=lambda k: (str(k[0]), k[1]))
-        spans = span_stage(enrich_stage(parse_stage(self.pages_frame()),
-                                        self.spark))
-        pdf = (spans
-               .where(f"lang = '{lang}' AND host_bucket = {bucket}")
-               .orderBy("doc_id").limit(KERNEL_SAMPLE_SPANS).toPandas())
-        n = len(pdf)
-        frame = {c: pdf[c].to_numpy() for c in SPAN_COLUMNS
-                 if c in pdf.columns}
-        frame["events"] = np.full(n, None, dtype=object)
-        frame["links"] = np.full(n, None, dtype=object)
-        frame["attr:http.url"] = pdf["url"].to_numpy()
-        frame["attr:http.status_code"] = np.full(n, 200)
-        frame["attr:n_chars"] = pdf["n_chars"].to_numpy()
-        frame["attr:lang"] = pdf["lang"].to_numpy()
-        spec = {"http.url": "str", "http.status_code": "int",
-                "n_chars": "int", "lang": "str"}
-        resource = {"service.name": f"crawler-{lang}",
-                    "host.bucket": int(bucket)}
-        return pd.DataFrame(frame), spec, lambda _k: resource
+    def plan_times(self, reps: int = 3) -> dict[str, float]:
+        """Per call span name, the median seconds of its driver-side work,
+        measured apart from the traced pass."""
+        return {name: statistics.median(fn() for _ in range(reps))
+                for name, fn in self.plan_probes().items()}
 
 
-class ExportRunner(Runner):
-    """The flagship: ``run_pipeline`` into a fresh sink, then collect its
-    aggregate."""
+class RoundtripRunner(Runner):
+    """The exporter/receiver pair over the seed's window of synthetic
+    pages: ``run_pipeline`` into a fresh sink and collect its aggregate,
+    then decode every blob of that sink and count it against the spans the
+    pages should produce."""
 
     def __init__(self, *args):
         super().__init__(*args)
+        self.pages_path = ""
         self.sink = ""
+        self.routes: dict = {}
 
-    def op(self):
+    def pages_frame(self):
+        return self.spark.read.parquet(self.pages_path)
+
+    def enriched(self):
+        return enrich_stage(parse_stage(self.pages_frame()), self.spark)
+
+    def receive_frame(self):
+        expected = expected_roundtrip(span_stage(self.enriched()))
+        return roundtrip_counts(
+            roundtrip_check(read_routed(self.spark, self.sink)), expected)
+
+    def prepare_set_up(self) -> None:
+        """Materialize the seed's pages into a fresh directory."""
+        old = self.pages_path
+        self.pages_path = self._fresh("pages")
+        materialize_pages(self.spark, self.pages_path, self.w, self.seed)
+        if old:
+            shutil.rmtree(old, ignore_errors=True)
+
+    def warm_up(self) -> dict[str, float]:
+        """Then count the source pages per route, for the checks."""
+        walls = super().warm_up()
+        self.routes = expected_routes(self.spark, self.pages_path)
+        return walls
+
+    def export(self):
         self.sink = self._fresh("sink")
         return run_pipeline(self.spark, self.pages_frame(), self.sink,
                             arms=False).collect()
 
+    def receive(self):
+        return self.receive_frame().collect()[0]
+
+    def op(self):
+        return self.export(), self.receive()
+
     def discard_output(self) -> None:
         if self.sink:
             shutil.rmtree(self.sink, ignore_errors=True)
-
-    def output_sink(self) -> str:
-        return self.sink
-
-    def plan_frame(self):
-        return encode_pages(enrich_stage(parse_stage(self.pages_frame()),
-                                         self.spark), arms=False)
 
     def traced_calls(self, tr, root):
         self.sink = self._fresh("sink")
@@ -437,10 +476,32 @@ class ExportRunner(Runner):
             agg = run_pipeline(self.spark, self.pages_frame(), self.sink,
                                arms=False)
         with tr.span("plans.aggregate", root) as collect:
-            out = agg.collect()
-        return out, [write, collect]
+            rows = agg.collect()
+        with tr.span("plans.verify", root) as verify:
+            counts = self.receive()
+        return (rows, counts), [write, collect, verify]
 
-    def check(self, rows, wire_ref):
+    def plan_probes(self):
+        def pipeline():
+            # the plan run_pipeline writes, then the aggregate it returns
+            # over the sink (listing the routes and reading a footer)
+            _plan(encode_pages(self.enriched(), arms=False))
+            aggregate_stage(read_routed(self.spark, self.sink))
+
+        def aggregate():
+            # the collect plans the frame run_pipeline already built
+            df = aggregate_stage(read_routed(self.spark, self.sink))
+            return _timed(lambda: _plan(df))
+
+        return {
+            "plans.pipeline": lambda: _timed(pipeline),
+            "plans.aggregate": aggregate,
+            "plans.verify": lambda: _timed(lambda: _plan(
+                self.receive_frame())),
+        }
+
+    def check(self, out, wire_ref):
+        rows, counts_row = out
         problems = []
         pages = self.w.pages
         got = {(r["lang"], r["host_bucket"]): r["pages"] for r in rows}
@@ -461,56 +522,171 @@ class ExportRunner(Runner):
         if wire_ref is not None and wire != wire_ref:
             problems.append(f"wire bytes {wire} differ from the first run's "
                             f"{wire_ref} on the same input")
+        if counts_row["decoded_spans"] != pages:
+            problems.append(f"decoded {counts_row['decoded_spans']} of "
+                            f"{pages} spans")
+        if counts_row["missing"] or counts_row["extra"]:
+            problems.append(f"missing={counts_row['missing']} "
+                            f"extra={counts_row['extra']}")
         return problems, wire
 
+    def layer_metrics(self, tp: dict) -> dict[str, float]:
+        counts = sink_counts(read_sink(self.sink))
+        pages = self.w.pages
+        tr = tp["trace"]
+        return {
+            **{f"{c}.s": _span_walls(tr, c)
+               for c in ("plans.pipeline", "plans.aggregate", "plans.verify")},
+            "plans.parse_enrich.s": self.parse_enrich_s(),
+            "codec.wire_bytes_per_page": counts["wire_bytes"] / pages,
+            "codec.raw_bytes_per_page": counts["raw_bytes"] / pages,
+            "codec.blobs": counts["blobs"],
+            "codec.zstd_ratio": counts["raw_bytes"] / counts["wire_bytes"],
+            **self.kernel_rates(),
+        }
 
-class ReceiveRunner(Runner):
-    """The receiver: decode every blob of a sink written in warm-up and
-    count it against the spans the pages should produce, in one job."""
+    def parse_enrich_s(self, reps: int = 3) -> float:
+        """Noop-sink wall of scan → parse → enrich, median of ``reps``."""
+        return _median_wall(
+            lambda: self.enriched().write.format("noop")
+            .mode("overwrite").save(), reps)
+
+    def kernel_rates(self) -> dict[str, float]:
+        """Single-thread driver timings of the codec kernels on a fixed
+        sample of this workload's own blobs (routes in key order, whole
+        blobs until ``KERNEL_SAMPLE_SPANS`` spans) and span rows."""
+        zstd = pa.Codec("zstd")
+        table = read_sink(self.sink).sort_by(
+            [("lang", "ascending"), ("host_bucket", "ascending"),
+             ("raw_bytes", "ascending")])
+        raws, spans = [], 0
+        for blob, raw_len, n in zip(table.column("blob").to_pylist(),
+                                    table.column("raw_bytes").to_pylist(),
+                                    table.column("n_spans").to_pylist()):
+            raws.append(zstd.decompress(blob, decompressed_size=raw_len,
+                                        asbytes=True))
+            spans += n
+            if spans >= KERNEL_SAMPLE_SPANS:
+                break
+        model = trace_model()
+        raw_bytes = sum(len(r) for r in raws)
+        frame, attrs_spec, resource = self._encode_sample()
+
+        def rate(work, fn):
+            return work / _median_wall(fn, budget=KERNEL_PROBE_S)
+
+        return {
+            "codec.encode_spans_per_s": rate(len(frame), lambda: (
+                encode_span_dataframe(frame, attributes_spec=attrs_spec,
+                                      resource_attrs_for=resource))),
+            "codec.zstd_mb_per_s": rate(raw_bytes / 1e6, lambda: [
+                zstd.compress(r, asbytes=True) for r in raws]),
+            "projector.spans_per_s": rate(spans, lambda: [
+                project_blob(r, model) for r in raws]),
+        }
+
+    def _encode_sample(self):
+        """The first route's first ``KERNEL_SAMPLE_SPANS`` span rows, as the
+        public span stage derives them, in the frame the encoder builds
+        for one route group: span columns, columnar attributes, and the
+        event and link cells at the pipeline's default rates."""
+        lang, bucket = min(self.routes, key=lambda k: (str(k[0]), k[1]))
+        g = (span_stage(self.enriched())
+             .where(F.col("lang").eqNullSafe(lang)
+                    & (F.col("host_bucket") == bucket))
+             .orderBy("doc_id").limit(KERNEL_SAMPLE_SPANS).toPandas())
+        frame, spec = _group_spans_frame(
+            g, lang, bucket, _ENCODE_DEFAULTS["events_every"].default,
+            _ENCODE_DEFAULTS["links_every"].default)
+        resource = {"service.name": f"crawler-{lang}",
+                    "host.bucket": int(bucket)}
+        return frame, spec, lambda _k: resource
+
+
+class QueriesRunner(Runner):
+    """The eight operator queries, one after another, each collected to
+    the driver and compared with its DuckDB twin. The tables are fixed:
+    the seed changes nothing here."""
 
     def __init__(self, *args):
         super().__init__(*args)
-        self.sink = ""
-        self._wire: int | None = None
+        import __spark_entry__ as entrymod
 
-    def prepare_input(self) -> dict[str, float]:
+        self.queries = {q: entrymod.queries()[q] for q in QUERIES}
+        self.oracle: dict[str, pd.DataFrame] = {}
+
+    def prepare_set_up(self) -> None:
+        """Check the tables and read each one's schema."""
+        verify_tables()
+        for f in sorted(os.listdir(SF_DIR)):
+            if f.endswith(".parquet"):
+                load_table(self.spark, SF_DIR, f[:-len(".parquet")])
+
+    def warm_up(self) -> dict[str, float]:
+        """Compute the expected results first."""
         t0 = time.monotonic()
-        self.sink = self._fresh("sink")
-        run_pipeline(self.spark, self.pages_frame(), self.sink, arms=False)
-        self._wire = sink_counts(read_sink(self.sink))["wire_bytes"]
-        return {"setup.sink_write_s": time.monotonic() - t0}
+        self.oracle = oracle_frames(self.workdir)
+        return {"setup.oracle_s": time.monotonic() - t0, **super().warm_up()}
 
-    def plan_frame(self):
-        expected = expected_roundtrip(
-            span_stage(enrich_stage(parse_stage(self.pages_frame()),
-                                    self.spark)))
-        return roundtrip_counts(
-            roundtrip_check(read_routed(self.spark, self.sink)), expected)
+    def _run(self, q: str) -> pd.DataFrame:
+        return self.queries[q](self.spark, SF_DIR).toPandas()
 
     def op(self):
-        return self.plan_frame().collect()[0]
-
-    def output_sink(self) -> str:
-        return self.sink
+        return {q: self._run(q) for q in QUERIES}
 
     def traced_calls(self, tr, root):
-        with tr.span("plans.verify", root) as verify:
-            out = self.op()
-        return out, [verify]
+        out, calls = {}, []
+        for q in QUERIES:
+            with tr.span(f"operators.{q}", root) as c:
+                out[q] = self._run(q)
+            calls.append(c)
+        return out, calls
 
-    def check(self, row, wire_ref):
+    def plan_probes(self):
+        return {f"operators.{q}": (lambda q=q: _timed(lambda: _plan(
+                    self.queries[q](self.spark, SF_DIR))))
+                for q in QUERIES}
+
+    def check(self, out, wire_ref):
         problems = []
-        if row["decoded_spans"] != self.w.pages:
-            problems.append(f"decoded {row['decoded_spans']} of "
-                            f"{self.w.pages} spans")
-        if row["missing"] or row["extra"]:
-            problems.append(f"missing={row['missing']} extra={row['extra']}")
-        return problems, self._wire
+        for q in QUERIES:
+            got, want = normalize(out[q]), self.oracle[q]
+            if list(got.columns) != list(want.columns):
+                problems.append(f"{q}: columns {list(got.columns)} != "
+                                f"{list(want.columns)}")
+            elif len(got) != len(want):
+                problems.append(f"{q}: {len(got)} rows != {len(want)}")
+            else:
+                try:
+                    pd.testing.assert_frame_equal(
+                        got, want, check_dtype=False, check_exact=True)
+                except AssertionError as e:
+                    problems.append(f"{q}: {str(e).splitlines()[0]}")
+        return problems, None
+
+    def layer_metrics(self, tp):
+        return {f"operators.{q}.s": _span_walls(tp["trace"], f"operators.{q}")
+                for q in QUERIES}
 
 
 def make_runner(w: Workload, seed: int, workdir: str) -> Runner:
-    cls = {"export": ExportRunner, "receive": ReceiveRunner}[w.kind]
+    cls = {"roundtrip": RoundtripRunner, "queries": QueriesRunner}[w.kind]
     return cls(w, seed, workdir)
+
+
+def _plan(df) -> None:
+    """Physical planning of ``df`` on the driver, as an action would."""
+    df._jdf.queryExecution().executedPlan()
+
+
+def _timed(fn) -> float:
+    t0 = time.monotonic()
+    fn()
+    return time.monotonic() - t0
+
+
+def _span_walls(tr: Trace, name: str) -> float:
+    return sum(sp.duration for sp in tr.spans if sp.name == name)
 
 
 def _alive(pid: int) -> bool:
@@ -527,11 +703,12 @@ def _alive(pid: int) -> bool:
         return False
 
 
-def _rep_time(fn, budget: float = KERNEL_PROBE_S, min_reps: int = 3) -> float:
-    """Median seconds of one call, repeating for ``budget`` seconds."""
+def _median_wall(fn, reps: int = 3, budget: float = 0.0) -> float:
+    """Median seconds of one call over at least ``reps`` calls, repeating
+    for ``budget`` seconds."""
     walls = []
     t_end = time.monotonic() + budget
-    while len(walls) < min_reps or time.monotonic() < t_end:
+    while len(walls) < reps or time.monotonic() < t_end:
         t0 = time.monotonic()
         fn()
         walls.append(time.monotonic() - t0)

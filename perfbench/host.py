@@ -61,6 +61,37 @@ def tree_cpu_s(root: int | None = None) -> float:
     return ticks / _CLK_TCK
 
 
+#: thread names (``comm``, cut to 15 characters) of HotSpot's JIT
+#: compiler threads
+_JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
+
+
+def tree_jit_cpu_s(root: int | None = None) -> float:
+    """CPU seconds (user + system) used so far by the JIT compiler threads
+    of the JVMs in the process tree.
+
+    Only live threads are counted, so the JVM must keep its compiler
+    threads for its whole life (``-XX:-UseDynamicNumberOfCompilerThreads``).
+    """
+    ticks = 0
+    for pid in tree_pids(root):
+        try:
+            tids = os.listdir(f"/proc/{pid}/task")
+        except OSError:
+            continue
+        for tid in tids:
+            try:
+                with open(f"/proc/{pid}/task/{tid}/stat") as f:
+                    stat = f.read()
+            except OSError:
+                continue
+            comm = stat[stat.index("(") + 1:stat.rindex(")")]
+            if comm.startswith(_JIT_THREADS):
+                fields = stat[stat.rindex(")") + 2:].split()
+                ticks += int(fields[11]) + int(fields[12])
+    return ticks / _CLK_TCK
+
+
 def tree_rss_bytes(root: int | None = None) -> int:
     total = 0
     for pid in tree_pids(root):

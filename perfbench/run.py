@@ -8,10 +8,10 @@ Run from the repository root. One driver process on ``local[nproc]`` runs
 one job at a time: a closed loop with a single client, the way the batch
 pipeline is used. The run sets up ``SETUPS`` times (session start plus the
 workload's input: pages materialized, or the query tables checked) and
-reports the median, warms up with the
-workload's untimed passes, then repeats the workload's operation
-until ``--seconds`` have passed, at least ``MIN_RUNS`` times. Every output
-is checked before anything is reported.
+reports the median of the set-ups after the first, which also launches
+the JVM. It warms up with the workload's untimed passes, then repeats the
+workload's operation until ``--seconds`` have passed, at least
+``MIN_RUNS`` times. Every output is checked before anything is reported.
 ``--trace 1`` adds one traced pass and the per-layer probes and reports
 the per-layer metrics instead of the end-to-end ones.
 
@@ -37,8 +37,8 @@ T0 = time.monotonic()
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-SETUPS = 3
-MIN_RUNS = 3
+SETUPS = 4
+MIN_RUNS = 2
 
 #: the driver_queries workload: the eight non-pipeline bench queries of
 #: ``__spark_entry__.queries()``
@@ -102,6 +102,7 @@ PER_LAYER = {
     "jvm.spill_bytes": "B",
     "jvm.peak_execution_memory_bytes": "B",
     "jvm.peak_heap_bytes": "B",
+    "jvm.jit_cpu_s": "s",
     "driver.plan_s": "s",
     **_OPERATORS,
     "setup.session_start_s": "s",
@@ -136,6 +137,7 @@ def measure(runner, seconds: float, monitor) -> list[dict]:
         runner.discard_output()
         probe = throttle_probe()
         c0, cpu0 = host_cpu_sample(), host.tree_cpu_s()
+        jit0 = host.tree_jit_cpu_s()
         t0 = time.monotonic()
         with host.RssSampler() as rss:
             try:
@@ -145,6 +147,7 @@ def measure(runner, seconds: float, monitor) -> list[dict]:
                 last = (str(e).strip().splitlines() or [""])[-1]
                 out, error = None, f"{type(e).__name__}: {last}"[:300]
         t1 = time.monotonic()
+        jit1 = host.tree_jit_cpu_s()
         cpu1, c1 = host.tree_cpu_s(), host_cpu_sample()
         attr = {"wall": round(t1 - t0, 4),
                 "stall": round(monitor.stall_between(t0, t1), 3),
@@ -156,8 +159,13 @@ def measure(runner, seconds: float, monitor) -> list[dict]:
             problems, wire = runner.check(out, wire_ref)
         if wire_ref is None and not problems:
             wire_ref = wire
-        runs.append({"wall": t1 - t0, "cpu_s": cpu1 - cpu0, "rss": rss.peak,
-                     "attr": attr, "problems": problems, "wire": wire})
+        # the JIT compiler's CPU is left out of cpu_s: it is still
+        # compiling after the warm-up, less on every pass, and how far it
+        # has got moves the tree's CPU more than the work does
+        jit = jit1 - jit0
+        runs.append({"wall": t1 - t0, "cpu_s": cpu1 - cpu0 - jit,
+                     "jit_s": jit, "rss": rss.peak, "attr": attr,
+                     "problems": problems, "wire": wire})
     return runs
 
 
@@ -167,7 +175,8 @@ def end_to_end(setups: list[float], runs: list[dict],
     pinned JVM heap, a constant part of each run's peak RSS."""
     med = statistics.median
     return {
-        "setup_s": (med(setups), len(setups)),
+        # the first set-up also launches the JVM: setup_s is a warm one
+        "setup_s": (med(setups[1:]), len(setups) - 1),
         "run_s": (med([r["wall"] for r in runs]), len(runs)),
         "cpu_s": (med([r["cpu_s"] for r in runs]), len(runs)),
         "peak_nonheap_rss_mb": (med([r["rss"] - heap for r in runs]) / 1e6,
@@ -186,14 +195,17 @@ def workload_view(w, e2e: dict, runs: list[dict]) -> list[tuple]:
             ("wire_bytes_per_page", runs[0]["wire"] / w.pages, "B/page", n)]
 
 
-def per_layer(runner, untraced_s: float, wire_ref, setup_info: dict
+def per_layer(runner, timed: list[dict], setup_info: dict
               ) -> tuple[dict, list[str], dict]:
-    """The traced pass and the probes: (metrics, problems, layer sum)."""
+    """The traced pass and the probes, after the checked ``timed`` runs:
+    (metrics, problems, layer sum)."""
     from perfbench import engine, spans
+
+    untraced_s = statistics.median(r["wall"] for r in timed)
 
     runner.discard_output()
     tp = runner.traced_pass()
-    problems, _ = runner.check(tp["out"], wire_ref)
+    problems, _ = runner.check(tp["out"], timed[0]["wire"])
     tr = tp["trace"]
     wall = tr.spans[0].duration
     plan = runner.plan_times()
@@ -254,6 +266,7 @@ def per_layer(runner, untraced_s: float, wire_ref, setup_info: dict
         "jvm.peak_execution_memory_bytes": max(
             (x["peak_execution_memory_bytes"] for x in st), default=0),
         "jvm.peak_heap_bytes": engine.peak_heap_bytes(runner.spark),
+        "jvm.jit_cpu_s": statistics.median(r["jit_s"] for r in timed),
         "driver.plan_s": sum(plan.values()),
         **{f"{c}.plan_s": v for c, v in plan.items()
            if c.startswith("operators.")},
@@ -298,14 +311,15 @@ def run(args) -> int:
         good = [r for r in runs if not r["problems"]]
         if args.trace and good:
             layers, trace_problems, layer_sum = per_layer(
-                runner, statistics.median(r["wall"] for r in good),
-                good[0]["wire"],
+                runner, good,
                 {"session_start_s": runner.session_walls[0], **warmup})
             runs.append({"problems": trace_problems})
             phases["trace"] = time.monotonic()
     finally:
-        runner.close()
-        shutil.rmtree(workdir, ignore_errors=True)
+        try:
+            runner.close()
+        finally:
+            shutil.rmtree(workdir, ignore_errors=True)
     phases["shutdown"] = time.monotonic()
 
     failed = [r for r in runs if r["problems"]]
@@ -323,8 +337,9 @@ def run(args) -> int:
     print(f"setups (s): {[round(x, 3) for x in setups]}; then "
           + ", ".join(f"{k} {v:.3f}" for k, v in warmup.items()))
     for i, r in enumerate(runs):
-        label = f"run {i}: {json.dumps(r['attr'])}" if "attr" in r \
-            else "traced run"
+        label = (f"run {i}: cpu_s {r['cpu_s']:.2f} + JIT {r['jit_s']:.2f}"
+                 f" {json.dumps(r['attr'])}" if "attr" in r
+                 else "traced run")
         print(label + (f" FAILED {r['problems']}" if r["problems"] else ""))
     print(f"stalls: {json.dumps(monitor.summary())}")
     print(f"failed_share: {len(failed)}/{len(runs)} = "

@@ -41,9 +41,9 @@ def test_names_and_units_match_benchmark_json():
 def test_end_to_end_reports_every_metric():
     runs = [{"wall": w, "cpu_s": 2.0 * w, "rss": 1e6 * w + 2e6, "wire": 500}
             for w in (1.0, 2.0, 4.0)]
-    got = run.end_to_end([9.0, 1.0, 2.0], runs, 2_000_000)
+    got = run.end_to_end([9.0, 1.0, 3.0, 2.0], runs, 2_000_000)
     assert got.keys() == run.END_TO_END.keys()
-    assert got["setup_s"] == (2.0, 3)
+    assert got["setup_s"] == (2.0, 3)  # the cold first set-up left out
     assert got["run_s"] == (2.0, 3)
     assert got["cpu_s"] == (4.0, 3)
     assert got["peak_nonheap_rss_mb"] == (2.0, 3)
@@ -121,6 +121,40 @@ def test_rss_peak_ignores_a_single_sample_spike(monkeypatch):
     for _ in range(5):
         sampler._sample()
     assert sampler.peak == 120
+
+
+def test_jit_cpu_counts_only_compiler_threads():
+    """A thread named as HotSpot names its C2 compiler thread is counted;
+    the CPU of the other threads is not."""
+    import ctypes
+    import threading
+    import time
+
+    def burn(seconds):
+        t_end = time.thread_time() + seconds
+        while time.thread_time() < t_end:
+            pass
+
+    libc = ctypes.CDLL(None)
+    burned, stop = threading.Event(), threading.Event()
+
+    def compiler():
+        libc.prctl(15, b"C2 CompilerThread0")  # PR_SET_NAME
+        burn(0.3)
+        burned.set()
+        stop.wait()  # only live threads are counted
+
+    before = host.tree_jit_cpu_s()
+    t = threading.Thread(target=compiler)
+    t.start()
+    try:
+        burned.wait()
+        burn(0.3)
+        got = host.tree_jit_cpu_s() - before
+    finally:
+        stop.set()
+        t.join()
+    assert got == pytest.approx(0.3, abs=0.05)
 
 
 def test_metric_display_strings_parse_back():

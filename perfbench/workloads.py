@@ -84,10 +84,9 @@ WORKLOADS = {w.name: w for w in (
     # the exporter/receiver pair on pages whose every url and id is
     # unique: large pools, so the Python encode (pools, varints, zstd) and
     # the decode do most of the work, and neither runs as one lone task
-    Workload("roundtrip_unique", "roundtrip", 60_000, warmups=1),
+    Workload("roundtrip_unique", "roundtrip", 60_000, warmups=2),
     # the eight operator queries over the fixed sf0.1 tables: planning and
-    # the operators module, no codec. Each query's code keeps getting
-    # faster over the first passes, so two untimed ones
+    # the operators module, no codec
     Workload("driver_queries", "queries", 0, warmups=2),
 )}
 
@@ -128,8 +127,10 @@ def session_conf(workdir: str) -> dict[str, str]:
     # the memory outside it (JVM native memory, the driver and the Python
     # workers), free of when the collector chooses to grow the heap. The
     # heap's own use is read from the engine (no hsperfdata file: the JVM
-    # would write it to /tmp)
+    # would write it to /tmp). The JIT compiler threads live as long as
+    # the JVM, so their CPU can be read per thread and kept out of cpu_s
     java_opts = (f"-Xms{heap_mb}m -XX:+AlwaysPreTouch -XX:-UsePerfData "
+                 "-XX:-UseDynamicNumberOfCompilerThreads "
                  f"-Djava.io.tmpdir={tmp}")
     return {
         "spark.master": f"local[{cores}]",
